@@ -609,12 +609,11 @@ def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full S2 (level 12) + H3-style (res 7) cell ids from unit-sphere xyz
     via the FUSED vectorized-numpy pandas UDF (one Arrow pass emits both
     cells) — with a BIT-EXACT DuckDB twin (the from-xyz encoders are
-    trig-free: divide/sqrt/int ops only, all IEEE-exact). The native
-    codegen column twins remain pytest-covered (bit-equal on sampled
-    points) but lost the bench head-to-head: the unrolled Hilbert chain
-    exceeds JIT method limits and drops to interpreted eval (round-4
-    honest-timing finding), while the numpy kernel walks the curve through
-    a chunked 4096-entry lookup table (6 gathers for 30 levels)."""
+    trig-free: divide/sqrt/int ops only, all IEEE-exact). A UDF rather
+    than native codegen column math: an unrolled Hilbert chain exceeds JIT
+    method limits and drops to interpreted eval (round-4 honest-timing
+    finding), while the numpy kernel walks the curve through a chunked
+    4096-entry lookup table (6 gathers for 30 levels)."""
     from pyspark.sql import functions as F
 
     from mvt_wrangler_spark.functions import cells as C

@@ -94,33 +94,6 @@ def _segments_intersect(a1, a2, b1, b2) -> bool:
     return False
 
 
-def rect_intersects_polygon(minx: float, miny: float, maxx: float, maxy: float, poly: Polygon) -> bool:
-    """Exact rect x polygon intersects (tile envelope vs filter geometry).
-
-    True if: bboxes overlap AND (a vertex is inside the rect, OR a rect
-    corner is inside the polygon, OR any edges cross).
-    """
-    if maxx < poly.minx or poly.maxx < minx or maxy < poly.miny or poly.maxy < miny:
-        return False
-    ex = poly.exterior
-    inside_rect = (ex[:, 0] >= minx) & (ex[:, 0] <= maxx) & (ex[:, 1] >= miny) & (ex[:, 1] <= maxy)
-    if inside_rect.any():
-        return True
-    corners_x = np.array([minx, minx, maxx, maxx])
-    corners_y = np.array([miny, maxy, miny, maxy])
-    if points_in_polygon(corners_x, corners_y, poly).any():
-        return True
-    rect_edges = [
-        ((minx, miny), (maxx, miny)), ((maxx, miny), (maxx, maxy)),
-        ((maxx, maxy), (minx, maxy)), ((minx, maxy), (minx, miny)),
-    ]
-    for i in range(len(ex) - 1):
-        for re1, re2 in rect_edges:
-            if _segments_intersect(ex[i], ex[i + 1], np.array(re1), np.array(re2)):
-                return True
-    return False
-
-
 def segments_cross(ax, ay, bx, by, cx, cy, dx, dy):
     """Inclusive segment-intersection predicate, vectorized over (A,B) arrays
     vs one (C,D) edge (scalars or arrays): orientation sign products

@@ -21,7 +21,7 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDIT = [
     # name -> why this one (the judge's expensive-query list + new round-3 ops)

@@ -70,36 +70,20 @@ def main():
         t0 = time.time()
         # best-throughput mix (measured, BENCH/BASELINE.md): native codegen
         # PIP mask with the materialize barrier (stops Catalyst inlining the
-        # polygon math into every filter/lambda reference — 4x) + pandas-UDF
-        # cell encoders (marginally faster than the native cell chain here).
+        # polygon math into every filter/lambda reference — 4x) + the fused
+        # pandas-UDF cell encoder.
         masked = pts.withColumn(
             "filter_mask", FL.filter_mask_native(program, F.col("lon"), F.col("lat")))
         surv = FL.apply_feature_filter(masked, program)
         surv = FL.apply_tag_filter(surv, program)
         assigned = tiling.assign_tiles(surv, z=10, with_local=False)
-        # north-star operator set: batched H3 + S2 cell encoding per row.
-        # SPARK_GRAFT_CELLS=native uses the pure-codegen column twins (no
-        # Arrow round trip, no Python-side allocation); default remains the
-        # pandas-UDF path measured in earlier rounds. Both are bit-identical
-        # (test_native_kernels).
+        # north-star operator set: batched H3 + S2 cell encoding per row,
+        # via ONE fused UDF — one shared lon/lat->xyz pass, one Arrow round
+        # trip for both cells (the measured winner, BENCH/BASELINE.md)
         from mvt_wrangler_spark.functions import cells as C
 
-        cells_mode = os.environ.get("SPARK_GRAFT_CELLS", "fused")
-        if cells_mode == "native":
-            assigned = C.with_s2_cell_native(assigned, level=12, lat="lat",
-                                             lng="lon", out="s2_cell")
-            assigned = C.with_h3_cell_native(assigned, res=7, lat="lat",
-                                             lng="lon", out="h3_cell")
-        elif cells_mode == "pandas":
-            # round-4 shape: two independent UDFs (kept for A/B runs)
-            assigned = assigned.withColumn(
-                "s2_cell", C.s2_cell_column(F.col("lat"), F.col("lon"), level=12)
-            ).withColumn("h3_cell", C.h3_cell_column(F.col("lat"), F.col("lon"), res=7))
-        else:
-            # round-5 default: ONE fused UDF — one shared lon/lat->xyz pass,
-            # one Arrow round trip for both cells (the round-4 #1 line item)
-            assigned = C.with_cells(assigned, level=12, res=7,
-                                    lat="lat", lng="lon")
+        assigned = C.with_cells(assigned, level=12, res=7,
+                                lat="lat", lng="lon")
         # Materialize ALL output columns (noop sink): a count() action lets
         # Catalyst prune the keeper/payload aggregates AND the H3/S2 encodes
         # feeding them (verified: the optimized count plan is a bare distinct

@@ -95,29 +95,6 @@ def test_h3_unpack_roundtrip():
         assert C._pack_h3(np.array([face]), res, np.array([q]), np.array([r]))[0] == c
 
 
-@pytest.mark.spark
-def test_cell_columns_match_numpy(spark):
-    import random
-
-    rng = random.Random(5)
-    rows = [(i, rng.uniform(-179, 179), rng.uniform(-84, 84)) for i in range(400)]
-    df = spark.createDataFrame(rows, "id long, lon double, lat double")
-    from pyspark.sql import functions as F
-
-    out = df.select(
-        "id",
-        C.s2_cell_column(F.col("lat"), F.col("lon"), level=12).alias("s2"),
-        C.h3_cell_column(F.col("lat"), F.col("lon"), res=7).alias("h3"),
-    ).collect()
-    lats = np.array([r[2] for r in rows])
-    lons = np.array([r[1] for r in rows])
-    s2 = C.s2_cell_id(lats, lons, 12)
-    h3 = C.h3_cell(lats, lons, 7)
-    got = {r.id: (r.s2, r.h3) for r in out}
-    for i in range(len(rows)):
-        assert got[i] == (s2[i], h3[i])
-
-
 def test_cube_round_half_up_ties():
     """Exact .5 fractional axial coords round HALF-UP (floor(x+0.5)) in the
     numpy kernel — the same formula the native column path and SQL oracle
@@ -136,43 +113,47 @@ def test_cube_round_half_up_ties():
     assert list(r) == [0, 0, 0, 0, 0]
 
 
+# face-center, cube-edge, near-pole, antimeridian and metro points (lon, lat)
+PINNED = [(0.0, 0.0), (90.0, 0.0), (0.0, 89.0), (180.0 - 1e-9, 0.0),
+          (-45.0, 35.26), (139.76, 35.68), (-74.0, 40.71)]
+
+
 @pytest.mark.spark
 def test_fused_cells_column_matches_separate(spark):
     """The fused struct encoder (one Arrow pass, shared xyz) is bit-equal to
-    the two standalone columns and to the numpy kernels — from lat/lng AND
-    from unit-xyz."""
+    the separate numpy S2 and H3 kernels — from lat/lng AND from unit-xyz —
+    at the finest and coarsest levels/resolutions, on random plus pinned
+    face/edge/metro points."""
     from pyspark.sql import functions as F
 
     rng = np.random.default_rng(17)
-    lats = rng.uniform(-89.9, 89.9, 500)
-    lons = rng.uniform(-180.0, 180.0, 500)
-    rows = [(i, float(lons[i]), float(lats[i])) for i in range(500)]
+    lats = np.concatenate([rng.uniform(-89.9, 89.9, 500), [p[1] for p in PINNED]])
+    lons = np.concatenate([rng.uniform(-180.0, 180.0, 500), [p[0] for p in PINNED]])
+    n = len(lats)
+    rows = [(i, float(lons[i]), float(lats[i])) for i in range(n)]
     df = spark.createDataFrame(rows, "id long, lon double, lat double")
-
-    fused = (df.withColumn("c", C.cells_column(F.col("lat"), F.col("lon"),
-                                               level=12, res=7))
-             .select("id", "c.s2_cell", "c.h3_cell").collect())
-    want_s2 = C.s2_cell_id(lats, lons, 12)
-    want_h3 = C.h3_cell(lats, lons, 7)
-    got = {r.id: (r.s2_cell, r.h3_cell) for r in fused}
-    for i in range(500):
-        assert got[i] == (want_s2[i], want_h3[i])
-
-    # with_cells wrapper produces the same two flat columns
-    flat = {r.id: (r.s2_cell, r.h3_cell)
-            for r in C.with_cells(df, level=12, res=7, lat="lat", lng="lon")
-            .select("id", "s2_cell", "h3_cell").collect()}
-    assert flat == got
-
-    # from-xyz fused twin == native codegen columns (trig-free, IEEE-exact)
     x, y, z = C._xyz(lats, lons)
     xdf = spark.createDataFrame(
-        [(i, float(x[i]), float(y[i]), float(z[i])) for i in range(500)],
+        [(i, float(x[i]), float(y[i]), float(z[i])) for i in range(n)],
         "id long, x double, y double, z double")
-    fx = (xdf.withColumn("c", C.cells_from_xyz_column(
-            F.col("x"), F.col("y"), F.col("z"), level=12, res=7))
-          .select("id", "c.s2_cell", "c.h3_cell").collect())
-    nat = C.with_s2_cell_from_xyz(xdf, level=12, x="x", y="y", z="z", out="s2")
-    nat = C.with_h3_cell_from_xyz(nat, res=7, x="x", y="y", z="z", out="h3")
-    want = {r.id: (r.s2, r.h3) for r in nat.select("id", "s2", "h3").collect()}
-    assert {r.id: (r.s2_cell, r.h3_cell) for r in fx} == want
+
+    for level, res in ((12, 7), (4, 0), (30, 13)):
+        want = dict(enumerate(zip(C.s2_cell_id(lats, lons, level).tolist(),
+                                  C.h3_cell(lats, lons, res).tolist())))
+        fused = (df.withColumn("c", C.cells_column(F.col("lat"), F.col("lon"),
+                                                   level=level, res=res))
+                 .select("id", "c.s2_cell", "c.h3_cell").collect())
+        got = {r.id: (r.s2_cell, r.h3_cell) for r in fused}
+        assert got == want, (level, res)
+
+        # with_cells wrapper produces the same two flat columns
+        flat = {r.id: (r.s2_cell, r.h3_cell)
+                for r in C.with_cells(df, level=level, res=res, lat="lat", lng="lon")
+                .select("id", "s2_cell", "h3_cell").collect()}
+        assert flat == want, (level, res)
+
+        # from-xyz fused twin == the numpy kernels (trig-free, IEEE-exact)
+        fx = (xdf.withColumn("c", C.cells_from_xyz_column(
+                F.col("x"), F.col("y"), F.col("z"), level=level, res=res))
+              .select("id", "c.s2_cell", "c.h3_cell").collect())
+        assert {r.id: (r.s2_cell, r.h3_cell) for r in fx} == want, (level, res)

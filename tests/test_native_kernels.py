@@ -1,14 +1,12 @@
-"""Native (codegen) kernels match their numpy twins: S2, H3, PIP mask."""
+"""Native (codegen) PIP mask matches its UDF and numpy twins."""
 
 from __future__ import annotations
 
 import random
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mvt_wrangler_spark.functions import cells as C
 from mvt_wrangler_spark.operators import filters as FL
 from mvt_wrangler_spark.sources.fixtures import default_filter_geojson
 from tests.oracle import pipeline_oracle as PO
@@ -18,39 +16,11 @@ from tests.oracle import pipeline_oracle as PO
 def pts_df(spark):
     rng = random.Random(99)
     rows = [(i, rng.uniform(-179.9, 179.9), rng.uniform(-84.9, 84.9)) for i in range(2000)]
-    # pin a few face/edge-adjacent points
+    # pin a few face/edge-adjacent and metro points
     rows += [(9000 + j, lon, lat) for j, (lon, lat) in enumerate(
         [(0.0, 0.0), (90.0, 0.0), (0.0, 89.0), (180.0 - 1e-9, 0.0), (-45.0, 35.26),
          (139.76, 35.68), (-74.0, 40.71)])]
     return rows, spark.createDataFrame(rows, "id long, lon double, lat double")
-
-
-@pytest.mark.spark
-def test_s2_native_matches_numpy(spark, pts_df):
-    rows, df = pts_df
-    for level in (4, 12, 30):
-        out = C.with_s2_cell_native(df, level=level, lat="lat", lng="lon", out="s2")
-        got = {r.id: r.s2 for r in out.select("id", "s2").collect()}
-        lats = np.array([r[2] for r in rows])
-        lons = np.array([r[1] for r in rows])
-        want = C.s2_cell_id(lats, lons, level)
-        mism = [i for i, r in enumerate(rows) if got[r[0]] != want[i]]
-        assert not mism, (level, mism[:5])
-
-
-@pytest.mark.spark
-def test_h3_native_matches_numpy(spark, pts_df):
-    rows, df = pts_df
-    for res in (0, 7, 13):
-        out = C.with_h3_cell_native(df, res=res, lat="lat", lng="lon", out="h3")
-        got = {r.id: r.h3 for r in out.select("id", "h3").collect()}
-        lats = np.array([r[2] for r in rows])
-        lons = np.array([r[1] for r in rows])
-        want = C.h3_cell(lats, lons, res)
-        mism = [i for i, r in enumerate(rows) if got[r[0]] != want[i]]
-        # F.round is half-up, np.round half-even: exact-.5 hex boundaries may
-        # differ; none should occur for random doubles
-        assert not mism, (res, mism[:5])
 
 
 @pytest.mark.spark

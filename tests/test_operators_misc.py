@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import subprocess
 import sys
@@ -16,6 +17,8 @@ from mvt_wrangler_spark.functions import tiling
 from mvt_wrangler_spark.operators import dedup as D
 from mvt_wrangler_spark.operators import zonal as Z
 from mvt_wrangler_spark.sources import images as I
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.spark
@@ -101,7 +104,7 @@ def test_cli_end_to_end(tmp_path):
     out = tmp_path / "out"
     prog = tmp_path / "filter.geojson"
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
         "from mvt_wrangler_spark.session import get_spark\n"
         "from mvt_wrangler_spark.sources import images as I\n"
         "s = get_spark(master='local[4]', shuffle_partitions=8)\n"
@@ -116,7 +119,7 @@ def test_cli_end_to_end(tmp_path):
         [sys.executable, "-m", "mvt_wrangler_spark.cli", str(src), str(out),
          "--filter", str(prog), "--zoom", "8", "--buckets", "4",
          "--master", "local[4]", "-n", "testset", "--job-id", "t1"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
+        capture_output=True, text=True, timeout=600, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     summary = json.loads(r.stdout.strip().splitlines()[-1])

@@ -7,11 +7,13 @@ through the shared session."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from plan_audit import AUDIT, formatted_plan, plan_red_flags  # noqa: E402
 
