@@ -40,6 +40,64 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism * 2)
 
 
+# Pixel formulas of the synthetic image fixtures (images.synth_images). Each
+# is restated in SQL by the oracle_sql() twins of the queries that use it
+# (FIXTURES.md §6): a change here must change those twins.
+def _gradient(i, yy, xx, cc):
+    """The RGB gradient image of id i."""
+    return (i * 31 + yy * 7 + xx * 13 + cc * 5) % 256
+
+
+def _terrain_rgb(i, yy, xx, cc):
+    """Terrain-RGB DEM tile of id i: elev packed as R*65536 + G*256 + B."""
+    elev = (i * 13 + yy * yy * 3 + xx * xx * 2 + yy * xx * 5) % (1 << 20)
+    return (elev >> (8 * (2 - cc))) & 255
+
+
+def _channel_sums(t):
+    return {f"sum_{ch}": int(t[:, :, c].sum()) for c, ch in enumerate("rgb")}
+
+
+_CHANNEL_SUMS = "sum_r long, sum_g long, sum_b long"
+
+
+def _decoded_stats(df: DataFrame, img: tuple[str, str, str, str], stats: str,
+                   reduce: Callable, keys: tuple[str, ...] = (),
+                   id_col: str = "image_id") -> DataFrame:
+    """Decode one image per row and reduce it to the checked columns.
+
+    `img` names the row's (bytes, fmt, w, h) columns. Output: `id` (the
+    `id_col` value as a long), the int `keys` columns passed through, the
+    `stats` columns from `reduce(t)` over the decoded int64 (h, w, 3) pixels
+    `t`, and `fp`, the position-weighted fingerprint
+    sum(t * (y*29 + x*13 + c*7 + 1)) mod 2^31-1 that the oracles restate."""
+    import numpy as np
+    import pandas as pd
+
+    from mvt_wrangler_spark.sources import images as I
+
+    b, fmt, w, h = img
+    schema = ", ".join(["id long", *(f"{k} int" for k in keys), stats, "fp long"])
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def run(pdfs):
+        for pdf in pdfs:
+            rows = []
+            for row in pdf.itertuples(index=False):
+                rw, rh = getattr(row, w), getattr(row, h)
+                t = I.decode(bytes(getattr(row, b)), getattr(row, fmt), rw, rh).astype(np.int64)
+                zy, zx, cc = I.index_grid(rh, rw)
+                rows.append({
+                    "id": int(getattr(row, id_col)),
+                    **{k: int(getattr(row, k)) for k in keys},
+                    **reduce(t),
+                    "fp": int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum() % 2147483647),
+                })
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
@@ -825,37 +883,12 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula (with the quantization model for the lossy fmt) in SQL. Exercises
     S3 decode + the zonal kernel under the driver's value hash, not just
     pytest."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import zonal as Z
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H = 24, 16
     ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(37)) == 3).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": [],
-                    "z": [], "x": [], "y": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-                rows["z"].append(0)
-                rows["x"].append(0)
-                rows["y"].append(0)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(
-        gen, "image_id string, bytes binary, fmt string, w int, h int, "
-             "z int, x bigint, y bigint")
+    imgs = synth_images(ids, 24, 16, _gradient).withColumns(
+        {"z": F.lit(0), "x": F.lit(0).cast("bigint"), "y": F.lit(0).cast("bigint")})
     out = Z.zonal_stats(imgs, gx=2, gy=2)
     return out.select(
         F.col("image_id").cast("long").alias("id"), "zone", "n_px",
@@ -873,53 +906,19 @@ def q_thumb_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel. The oracle brute-forces the same block-sum // 16 pooling (with the
     lossy quantization model) in SQL — so decode, pooling, and the thumbnail
     codec round-trip all sit under the driver's value hash."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H, FCT = 24, 16, 4
     ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(41)) == 5).distinct())
+    thumbs = M.thumbnail(synth_images(ids, 24, 16, _gradient), factor=4, out_fmt="rawz")
 
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
+    def means(t):
+        n_px = t.shape[0] * t.shape[1]
+        return {f"mean_{ch}": round(float(t[:, :, c].sum()) / n_px, 6)
+                for c, ch in enumerate("rgb")}
 
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    thumbs = M.thumbnail(imgs, factor=FCT, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        n_blk = (H // FCT) * (W // FCT)
-        for pdf in pdfs:
-            rows = {"id": [], "mean_r": [], "mean_g": [], "mean_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.thumb), row.fmt, row.tw, row.th).astype(np.int64)
-                g = _grids.get((row.th, row.tw))
-                if g is None:
-                    g = _grids.setdefault((row.th, row.tw),
-                                          np.mgrid[0:row.th, 0:row.tw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum() % 2147483647)
-                rows["id"].append(int(row.image_id))
-                for col, c in (("mean_r", 0), ("mean_g", 1), ("mean_b", 2)):
-                    rows[col].append(round(float(t[:, :, c].sum()) / n_blk, 6))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return thumbs.mapInPandas(
-        stats, "id long, mean_r double, mean_g double, mean_b double, fp long")
+    return _decoded_stats(thumbs, ("thumb", "fmt", "tw", "th"),
+                          "mean_r double, mean_g double, mean_b double", means)
 
 
 def q_patch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,56 +931,13 @@ def q_patch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel formula (incl. the qlossy quantization model) and the grid
     arithmetic in SQL, so decode, grid split, and the patch codec
     round-trip all sit under the driver's value hash."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H, P = 24, 16, 8
     ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(47)) == 9).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    patches = M.extract_patches(imgs, patch=P, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "gy": [], "gx": [],
-                    "sum_r": [], "sum_g": [], "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.patch), row.fmt, row.pw, row.ph).astype(np.int64)
-                g = _grids.get((row.ph, row.pw))
-                if g is None:
-                    g = _grids.setdefault((row.ph, row.pw),
-                                          np.mgrid[0:row.ph, 0:row.pw, 0:3])
-                zy, zx, cc = g
-                rows["id"].append(int(row.image_id))
-                rows["gy"].append(int(row.gy))
-                rows["gx"].append(int(row.gx))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                                      % 2147483647))
-            yield pd.DataFrame(rows)
-
-    return patches.mapInPandas(
-        stats,
-        "id long, gy int, gx int, sum_r long, sum_g long, sum_b long, fp long")
+    patches = M.extract_patches(synth_images(ids, 24, 16, _gradient), patch=8, out_fmt="rawz")
+    return _decoded_stats(patches, ("patch", "fmt", "pw", "ph"), _CHANNEL_SUMS,
+                          _channel_sums, keys=("gy", "gx"))
 
 
 def q_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -990,32 +946,11 @@ def q_recon_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original and its 4x box-down -> nearest-up reconstruction
     (multimodal.recon_error). The oracle restates pixels (incl. qlossy),
     block pooling, and the per-pixel squared error in SQL."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H = 24, 16
     ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(61)) == 17).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    out = M.recon_error(imgs, factor=4)
+    out = M.recon_error(synth_images(ids, 24, 16, _gradient), factor=4)
     return out.select(F.col("image_id").cast("long").alias("id"),
                       "sse", "max_err")
 
@@ -1031,34 +966,11 @@ def q_contour(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint over the full (h-1)x(w-1) cell grid. The oracle restates
     elevation (incl. the qlossy per-channel model), the per-tile
     threshold, the 4-corner classification, and the saddle rule in SQL."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H = 24, 16
     ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(59)) == 13).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx = np.mgrid[0:H, 0:W]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                elev = (int(i) * 13 + yy * yy * 3 + xx * xx * 2 + yy * xx * 5) % (1 << 20)
-                px = np.stack([elev // 65536, (elev // 256) % 256, elev % 256],
-                              axis=-1).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    dem = imgs.withColumn(
+    dem = synth_images(ids, 24, 16, _terrain_rgb).withColumn(
         "iso", F.pmod(F.col("image_id").cast("long") * 13, F.lit(1 << 20)) + 1700)
     out = M.contour_cells(dem, threshold_col="iso")
     return out.select(F.col("image_id").cast("long").alias("id"),
@@ -1076,56 +988,14 @@ def q_augment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation, the source-coordinate permutation, and the qlossy model in
     SQL — augmentation is reproducible BECAUSE a second engine can
     recompute it."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H, CW, CH = 24, 16, 16, 12
     ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(53)) == 11).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    aug = M.augment(imgs, crop_w=CW, crop_h=CH, salt=0, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "hflip": [], "vflip": [], "ox": [], "oy": [],
-                    "sum_r": [], "sum_g": [], "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.bytes), row.fmt, row.w, row.h).astype(np.int64)
-                g = _grids.get((row.h, row.w))
-                if g is None:
-                    g = _grids.setdefault((row.h, row.w),
-                                          np.mgrid[0:row.h, 0:row.w, 0:3])
-                zy, zx, cc = g
-                rows["id"].append(int(row.image_id))
-                for k in ("hflip", "vflip", "ox", "oy"):
-                    rows[k].append(int(getattr(row, k)))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                                      % 2147483647))
-            yield pd.DataFrame(rows)
-
-    return aug.mapInPandas(
-        stats, "id long, hflip int, vflip int, ox int, oy int, "
-               "sum_r long, sum_g long, sum_b long, fp long")
+    aug = M.augment(synth_images(ids, 24, 16, _gradient),
+                    crop_w=16, crop_h=12, salt=0, out_fmt="rawz")
+    return _decoded_stats(aug, ("bytes", "fmt", "w", "h"), _CHANNEL_SUMS,
+                          _channel_sums, keys=("hflip", "vflip", "ox", "oy"))
 
 
 def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1138,55 +1008,18 @@ def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel. The oracle restates elevation unpack (incl. the qlossy
     per-channel quantization model), both gradients, the shift-4 L1 shade,
     and the output packing in SQL."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H = 24, 16
     ids = _spread(_points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(43)) == 7).distinct())
+    shades = M.hillshade(synth_images(ids, 24, 16, _terrain_rgb), shift=4, out_fmt="rawz")
 
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx = np.mgrid[0:H, 0:W]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                elev = (int(i) * 13 + yy * yy * 3 + xx * xx * 2 + yy * xx * 5) % (1 << 20)
-                px = np.stack([elev // 65536, (elev // 256) % 256, elev % 256],
-                              axis=-1).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
+    def shade(t):
+        s = t[:, :, 0]
+        return {"mean_shade": round(float(s.sum()) / s.size, 6), "max_shade": int(s.max())}
 
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    shades = M.hillshade(imgs, shift=4, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "mean_shade": [], "max_shade": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.shade), row.fmt, row.tw, row.th).astype(np.int64)
-                g = _grids.get((row.th, row.tw))
-                if g is None:
-                    g = _grids.setdefault((row.th, row.tw),
-                                          np.mgrid[0:row.th, 0:row.tw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum() % 2147483647)
-                rows["id"].append(int(row.image_id))
-                rows["mean_shade"].append(
-                    round(float(t[:, :, 0].sum()) / (row.th * row.tw), 6))
-                rows["max_shade"].append(int(t[:, :, 0].max()))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return shades.mapInPandas(
-        stats, "id long, mean_shade double, max_shade long, fp long")
+    return _decoded_stats(shades, ("shade", "fmt", "tw", "th"),
+                          "mean_shade double, max_shade long", shade)
 
 
 def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1198,55 +1031,22 @@ def q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-image mean + fingerprint. The oracle restates histogram, cumsum
     LUT (window sum), and remap in SQL — including the qlossy per-channel
     quantization model on the input side."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H = 16, 8
     # no _spread here: the 16x8 fixture's per-image Python is so light that
     # the two-pass operator (histogram + remap both re-read the gen) pays
     # more in repartition exchanges + task scheduling than the parallelism
     # returns (A/B at sf0.1: 1.43 s vs 2.5-3.1 s median with _spread)
     ids = _points(spark, sf_dir).select("id").filter(F.pmod("id", F.lit(47)) == 9).distinct()
 
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                u = (int(i) * 7 + yy * 3 + xx + cc * 5) % 16
-                px = (u * u).astype(np.uint8)  # skewed: 16 clumped levels
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
+    def skewed(i, yy, xx, cc):
+        u = (i * 7 + yy * 3 + xx + cc * 5) % 16
+        return u * u  # 16 clumped levels
 
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
-    eq = M.equalize(imgs, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "mean_eq": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.eq), row.fmt, row.w, row.h).astype(np.int64)
-                g = _grids.get((row.h, row.w))
-                if g is None:
-                    g = _grids.setdefault((row.h, row.w),
-                                          np.mgrid[0:row.h, 0:row.w, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum() % 2147483647)
-                rows["id"].append(int(row.image_id))
-                rows["mean_eq"].append(round(float(t.sum()) / (row.h * row.w * 3), 6))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return eq.mapInPandas(stats, "id long, mean_eq double, fp long")
+    eq = M.equalize(synth_images(ids, 16, 8, skewed), out_fmt="rawz")
+    return _decoded_stats(eq, ("eq", "fmt", "w", "h"), "mean_eq double",
+                          lambda t: {"mean_eq": round(float(t.sum()) / t.size, 6)})
 
 
 def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1287,40 +1087,23 @@ def _ahash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone) -> real codec encode -> ahash64 (decode, 8x8 integer luma
     pooling, mean-threshold bits). Shared by the pair and cluster
     queries so both stay on one bytes->hash stage."""
-    import numpy as np
-    import pandas as pd
-
-    from mvt_wrangler_spark.operators.dedup import phash_hamming_pairs
     from mvt_wrangler_spark.operators.multimodal import ahash64
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H = 24, 16
     ids = _spread(_points(spark, sf_dir).select("id")
                   .filter((F.pmod("id", F.lit(5)) < 2)
                           & (F.pmod(F.expr("id div 5"), F.lit(8)) == 0))
                   .distinct())
 
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                i = int(i)
-                cl, b = i // 5, i % 5
-                px = (cl * 31 + yy * 7 + xx * 13 + cc * 5) % 200
-                if b == 1:  # localized bump in one cluster-chosen zone
-                    zy0, zx0 = cl % 8, (cl // 8) % 8
-                    px = px + 45 * ((yy // 2 == zy0) & (xx // 3 == zx0))
-                fmt = fmts[i % 3]
-                rows["image_id"].append(str(i))
-                rows["bytes"].append(I.encode(px.astype(np.uint8), fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
+    def pair_member(i, yy, xx, cc):
+        cl = i // 5
+        px = (cl * 31 + yy * 7 + xx * 13 + cc * 5) % 200
+        if i % 5 == 1:  # localized bump in one cluster-chosen zone
+            zy0, zx0 = cl % 8, (cl // 8) % 8
+            px = px + 45 * ((yy // 2 == zy0) & (xx // 3 == zx0))
+        return px
 
-    imgs = ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")
+    imgs = synth_images(ids, 24, 16, pair_member)
     # Materialize (id, ahash) ONCE per invocation: consumers reference it
     # several times (hamming_keepers joins df twice; the banding operators
     # re-materialize only their own slim projection), and an
@@ -1444,27 +1227,17 @@ def q_bytes_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(lower(hex(bytes))) so the oracle can rebuild the exact byte stream
     from the pixel formula (printf %02x per byte in row-major order) and md5
     the same string — binary content hashing under the value gate."""
-    import numpy as np
-    import pandas as pd
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W, H = 8, 6
     ids = _spread(_points(spark, sf_dir).select("id")
                   .filter(F.pmod("id", F.lit(53)) == 11).distinct())
 
-    def gen(pdfs):
-        for pdf in pdfs:
-            rows = {"id": [], "bytes": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                i = int(i)
-                seed = i // 106
-                px = ((seed * 37 + yy * 11 + xx * 17 + cc * 23) % 256).astype(np.uint8)
-                rows["id"].append(i)
-                rows["bytes"].append(px.tobytes())
-            yield pd.DataFrame(rows)
+    def seeded(i, yy, xx, cc):
+        return ((i // 106) * 37 + yy * 11 + xx * 17 + cc * 23) % 256
 
-    imgs = ids.mapInPandas(gen, "id long, bytes binary")
-    return (imgs.select("id", F.md5(F.lower(F.hex("bytes"))).alias("content_hash"))
+    imgs = synth_images(ids, 8, 6, seeded, fmt="raw")
+    return (imgs.select(F.col("image_id").cast("long").alias("id"),
+                        F.md5(F.lower(F.hex("bytes"))).alias("content_hash"))
             .groupBy("content_hash")
             .agg(F.count(F.lit(1)).alias("n_copies"),
                  F.min("id").alias("keeper_id")))
@@ -1763,59 +1536,14 @@ def q_overzoom(spark: SparkSession, sf_dir: str) -> DataFrame:
     parent (qy*8 + y//2, qx*8 + x//2)) with the qlossy quant model, so
     decode, crop, upsample, and the codec round-trip all sit under the
     value hash."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W = H = 16
     ids = _spread(_points(spark, sf_dir).select("id")
                   .filter(F.pmod("id", F.lit(37)) == 3).distinct())
-
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                px = ((int(i) * 31 + yy * 7 + xx * 13 + cc * 5) % 256).astype(np.uint8)
-                fmt = fmts[int(i) % 3]
-                rows["image_id"].append(str(int(i)))
-                rows["bytes"].append(I.encode(px, fmt))
-                rows["fmt"].append(fmt)
-                rows["w"].append(W)
-                rows["h"].append(H)
-            yield pd.DataFrame(rows)
-
-    imgs = ids.mapInPandas(
-        gen, "image_id string, bytes binary, fmt string, w int, h int")
-    children = M.overzoom(imgs, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "child": [], "sum_r": [], "sum_g": [],
-                    "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.cbytes), row.cfmt,
-                             row.cw, row.ch).astype(np.int64)
-                g = _grids.get((row.ch, row.cw))
-                if g is None:
-                    g = _grids.setdefault((row.ch, row.cw),
-                                          np.mgrid[0:row.ch, 0:row.cw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                         % 2147483647)
-                rows["id"].append(int(row.image_id))
-                rows["child"].append(int(row.child))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return children.mapInPandas(
-        stats,
-        "id long, child int, sum_r long, sum_g long, sum_b long, fp long")
+    children = M.overzoom(synth_images(ids, 16, 16, _gradient), out_fmt="rawz")
+    return _decoded_stats(children, ("cbytes", "cfmt", "cw", "ch"), _CHANNEL_SUMS,
+                          _channel_sums, keys=("child",))
 
 
 def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1830,63 +1558,25 @@ def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     block at quadrant (py//8, px//8)) with the qlossy quant model, so
     decode, downsample, quadrant placement, and both codec round-trips
     all sit under the value hash."""
-    import numpy as np
-    import pandas as pd
-
     from mvt_wrangler_spark.operators import multimodal as M
-    from mvt_wrangler_spark.sources import images as I
+    from mvt_wrangler_spark.sources.images import synth_images
 
-    W = H = 16
     ids = _spread(_points(spark, sf_dir).select("id")
                   .filter(F.pmod("id", F.lit(41)) == 5).distinct())
+    # one synthetic image per child key k = 4*id + q; its default fmt
+    # FMT_CYCLE[k % 3] is the oracle's (id + q) % 3 cycle, since 4 % 3 == 1
+    keys = ids.select(F.explode(F.array(*(F.col("id") * 4 + q for q in range(4)))).alias("id"))
 
-    def gen(pdfs):
-        fmts = ["raw", "rawz", "qlossy"]
-        for pdf in pdfs:
-            rows = {"parent_id": [], "child": [], "bytes": [], "fmt": [],
-                    "w": [], "h": []}
-            yy, xx, cc = np.mgrid[0:H, 0:W, 0:3]  # hoisted: per-row mgrid alloc dominated the loop
-            for i in pdf["id"].to_numpy(dtype=np.int64):
-                for q in range(4):
-                    px = ((int(i) * 31 + q * 11 + yy * 7 + xx * 13 + cc * 5)
-                          % 256).astype(np.uint8)
-                    rows["parent_id"].append(str(int(i)))
-                    rows["child"].append(q)
-                    rows["bytes"].append(I.encode(px, fmts[(int(i) + q) % 3]))
-                    rows["fmt"].append(fmts[(int(i) + q) % 3])
-                    rows["w"].append(W)
-                    rows["h"].append(H)
-            yield pd.DataFrame(rows)
+    def child(k, yy, xx, cc):
+        return (_gradient(k // 4, yy, xx, cc) + k % 4 * 11) % 256
 
-    kids = ids.mapInPandas(
-        gen, "parent_id string, child int, bytes binary, fmt string, "
-             "w int, h int")
+    kids = synth_images(keys, 16, 16, child).select(
+        F.expr("CAST(CAST(image_id AS BIGINT) div 4 AS STRING)").alias("parent_id"),
+        F.expr("CAST(CAST(image_id AS BIGINT) % 4 AS INT)").alias("child"),
+        "bytes", "fmt", "w", "h")
     parents = M.mosaic(kids, out_fmt="rawz")
-
-    def stats(pdfs, _grids={}):  # per-process mgrid memo (noqa: B006 — intentional)
-        for pdf in pdfs:
-            rows = {"id": [], "n_children": [], "sum_r": [], "sum_g": [],
-                    "sum_b": [], "fp": []}
-            for row in pdf.itertuples(index=False):
-                t = I.decode(bytes(row.pbytes), row.pfmt,
-                             row.pw, row.ph).astype(np.int64)
-                g = _grids.get((row.ph, row.pw))
-                if g is None:
-                    g = _grids.setdefault((row.ph, row.pw),
-                                          np.mgrid[0:row.ph, 0:row.pw, 0:3])
-                zy, zx, cc = g
-                fp = int((t * (zy * 29 + zx * 13 + cc * 7 + 1)).sum()
-                         % 2147483647)
-                rows["id"].append(int(row.parent_id))
-                rows["n_children"].append(int(row.n_children))
-                for col, c in (("sum_r", 0), ("sum_g", 1), ("sum_b", 2)):
-                    rows[col].append(int(t[:, :, c].sum()))
-                rows["fp"].append(fp)
-            yield pd.DataFrame(rows)
-
-    return parents.mapInPandas(
-        stats, "id long, n_children int, sum_r long, sum_g long, "
-               "sum_b long, fp long")
+    return _decoded_stats(parents, ("pbytes", "pfmt", "pw", "ph"), _CHANNEL_SUMS,
+                          _channel_sums, keys=("n_children",), id_col="parent_id")
 
 
 def q_clip_lines(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,7 +4,7 @@ The graft input (BASELINE.json input_hint) is an Iceberg-style table
   images(image_id string, bytes binary, w int, h int, fmt string,
          caption string, phash long, lon double, lat double, kind string,
          tags map<string,string>, layer string)
-Schemas and generation rules follow /root/repo/FIXTURES.md: deterministic in
+Schemas and generation rules follow FIXTURES.md: deterministic in
 image_id (seed folded into a splitmix64 stream), hot-spot clustered lon/lat
 for tile skew, every 17th row an exact pixel duplicate of its predecessor
 (same phash, different image_id) to exercise dedup.
@@ -24,7 +24,9 @@ parallel at any scale (the 10^12-row design point shards by range).
 
 from __future__ import annotations
 
+import functools
 import zlib
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -142,8 +144,6 @@ def _gen_partition(pdfs, seed: int, with_pixels: bool):
         ids = pdf["id"].to_numpy(dtype=np.int64)
         n = len(ids)
         lon, lat = lonlat_for(ids, seed)
-        w = np.array(W_CYCLE)[ids % len(W_CYCLE)]
-        h = np.array(H_CYCLE)[ids % len(H_CYCLE)]
         fmt = np.array(FMT_CYCLE)[ids % len(FMT_CYCLE)]
         kind = np.array(KIND_CYCLE)[ids % len(KIND_CYCLE)]
         # every 17th row duplicates the previous row's pixels (same phash)
@@ -195,3 +195,40 @@ def synthetic_images(spark: SparkSession, n: int, seed: int = 42,
     return rng.mapInPandas(
         lambda it: _gen_partition(it, seed, with_pixels), IMAGES_SCHEMA
     )
+
+
+@functools.lru_cache(maxsize=64)
+def index_grid(h: int, w: int) -> np.ndarray:
+    """(yy, xx, cc) index grids of an (h, w, 3) image, built once per process.
+
+    Read-only: callers share the cached arrays."""
+    g = np.mgrid[0:h, 0:w, 0:3]
+    g.setflags(write=False)
+    return g
+
+
+def synth_images(ids: DataFrame, w: int, h: int,
+                 pixels: Callable[[int, np.ndarray, np.ndarray, np.ndarray], np.ndarray],
+                 fmt: str | None = None) -> DataFrame:
+    """One encoded w x h image per `id` row, drawn from a pixel formula.
+
+    The contract queries' fixture: `pixels(i, yy, xx, cc)` maps an id and the
+    index grids to the image's values (taken as u8), so a SQL oracle can
+    restate every pixel. `fmt` defaults to FMT_CYCLE[i % 3]. Returns
+    image_id (the id as text), bytes, fmt, w, h in one mapInPandas.
+    """
+    def gen(pdfs):
+        yy, xx, cc = index_grid(h, w)
+        for pdf in pdfs:
+            rows = {"image_id": [], "bytes": [], "fmt": [], "w": [], "h": []}
+            for i in pdf["id"].to_numpy(dtype=np.int64):
+                i = int(i)
+                f = fmt or FMT_CYCLE[i % 3]
+                rows["image_id"].append(str(i))
+                rows["bytes"].append(encode(pixels(i, yy, xx, cc), f))
+                rows["fmt"].append(f)
+                rows["w"].append(w)
+                rows["h"].append(h)
+            yield pd.DataFrame(rows)
+
+    return ids.mapInPandas(gen, "image_id string, bytes binary, fmt string, w int, h int")

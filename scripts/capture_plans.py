@@ -6,7 +6,8 @@ Writes plans/r07/<query>_<suffix>.txt. Plans only — nothing is executed.
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 def main():
     suffix = sys.argv[1]
@@ -21,7 +22,7 @@ def main():
         df = qs[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        out = f"/root/repo/plans/r07/{name}_{suffix}.txt"
+        out = os.path.join(REPO, "plans", "r07", f"{name}_{suffix}.txt")
         with open(out, "w") as f:
             f.write(plan)
         print(f"wrote {out} ({len(plan.splitlines())} lines)")

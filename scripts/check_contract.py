@@ -10,12 +10,13 @@ Usage: python scripts/check_contract.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -50,6 +51,49 @@ def value_hash(rows, cols):
     return h.hexdigest()[:16]
 
 
+def oracle_connection(sf_dir):
+    """DuckDB connection with one view per parquet table of `sf_dir`."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def compare(spark, con, sf_dir, name, fn, sql):
+    """Run query `fn` on Spark and its oracle `sql` (None: rows only) on
+    DuckDB; return (ok, report) comparing row count, columns and value hash."""
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    cols = df.columns
+    rows = [tuple(r) for r in df.collect()]
+    t1 = time.time()
+    if sql is None:
+        return True, f"{name:20s} rows={len(rows):6d} (rows-only, no oracle) {t1-t0:5.1f}s"
+    cur = con.execute(sql)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    ok_n = len(rows) == len(orows)
+    ok_c = sorted(cols) == sorted(ocols)
+    hv_s = value_hash(rows, cols)
+    hv_o = value_hash(orows, ocols)
+    ok_v = hv_s == hv_o
+    ok = ok_n and ok_c and ok_v
+    report = (f"{name:20s} {'OK ' if ok else 'FAIL'} rows={len(rows)}/{len(orows)} "
+              f"cols={'=' if ok_c else (cols, ocols)} "
+              f"hash={'=' if ok_v else (hv_s, hv_o)} {t1-t0:5.1f}s")
+    if not ok_v and ok_n and ok_c:
+        # show first differing canonical lines
+        order = sorted(range(len(cols)), key=lambda i: cols[i])
+        ls = sorted("|".join(canon(r[i]) for i in order) for r in rows)
+        oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
+        lo = sorted("|".join(canon(r[i]) for i in oorder) for r in orows)
+        for a, b in zip(ls, lo):
+            if a != b:
+                report += f"\n   spark: {a}\n   duck : {b}"
+                break
+    return ok, report
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -59,46 +103,17 @@ def main():
     import __spark_entry__ as entrymod
 
     spark = get_spark(master="local[8]", shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = oracle_connection(sf_dir)
 
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        cols = df.columns
-        rows = [tuple(r) for r in df.collect()]
-        t1 = time.time()
-        if name not in osql:
-            print(f"{name:20s} rows={len(rows):6d} (rows-only, no oracle) {t1-t0:5.1f}s")
-            continue
-        cur = con.execute(osql[name])
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
-        ok_n = len(rows) == len(orows)
-        ok_c = sorted(cols) == sorted(ocols)
-        hv_s = value_hash(rows, cols)
-        hv_o = value_hash(orows, ocols)
-        ok_v = hv_s == hv_o
-        status = "OK " if (ok_n and ok_c and ok_v) else "FAIL"
-        print(f"{name:20s} {status} rows={len(rows)}/{len(orows)} cols={'=' if ok_c else (cols, ocols)} "
-              f"hash={'=' if ok_v else (hv_s, hv_o)} {t1-t0:5.1f}s")
-        if status == "FAIL":
+        ok, report = compare(spark, con, sf_dir, name, fn, osql.get(name))
+        print(report)
+        if not ok:
             failures.append(name)
-            if not ok_v and ok_n and ok_c:
-                # show first differing canonical lines
-                order = sorted(range(len(cols)), key=lambda i: cols[i])
-                ls = sorted("|".join(canon(r[i]) for i in order) for r in rows)
-                oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                lo = sorted("|".join(canon(r[i]) for i in oorder) for r in orows)
-                for a, b in zip(ls, lo):
-                    if a != b:
-                        print(f"   spark: {a}\n   duck : {b}")
-                        break
     print("FAILURES:", failures or "none")
     spark.stop()
     sys.exit(1 if failures else 0)
