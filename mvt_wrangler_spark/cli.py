@@ -61,10 +61,9 @@ def main(argv: list[str] | None = None) -> int:
         print(f"error: input does not exist: {args.input}", file=sys.stderr)
         return 2
 
-    from pyspark.sql import functions as F  # noqa: F401
+    from pyspark.sql import functions as F
 
-    from .functions.metrics import observed
-    from .plans.pipeline import run_pipeline
+    from .plans.pipeline import rollup, run_pipeline
     from .session import get_spark
     from .sources.catalog import SnapshotTable
 
@@ -76,7 +75,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         images = spark.read.parquet(args.input)
 
-    res = run_pipeline(spark, images, program, z=args.zoom, min_z=args.min_zoom,
+    res = run_pipeline(spark, images, program, z=args.zoom,
                        dedup=not args.no_dedup, with_cells=args.cells)
 
     from .functions.tiling import _zoom_acc
@@ -88,10 +87,14 @@ def main(argv: list[str] | None = None) -> int:
                         key_min=_zoom_acc(args.zoom))
     job_id = args.job_id or f"cli-{int(t0)}"
     snap = out.write_snapshot(res.deduped, job_id=job_id, sort_col="tile_id")
+    # everything downstream of the commit reads the committed rows: the row
+    # path ran once, inside write_snapshot (and not at all on a resume)
+    committed = out.read_current(spark)
 
     # stats + pyramid land next to the data (tile_stats table of the survey)
-    res.stats.write.mode("overwrite").parquet(f"{args.output}/stats")
-    res.pyramid.write.mode("overwrite").parquet(f"{args.output}/pyramid")
+    stats, pyramid = rollup(committed, args.zoom, min_z=args.min_zoom)
+    stats.write.mode("overwrite").parquet(f"{args.output}/stats")
+    pyramid.write.mode("overwrite").parquet(f"{args.output}/pyramid")
 
     # metadata sidecar: input metadata merged with CLI overrides (metadata.rs)
     meta_in = {}
@@ -110,12 +113,12 @@ def main(argv: list[str] | None = None) -> int:
 
     pm_stats = None
     if args.pmtiles:
-        # real PMTiles v3 serving archive: MVT-encode the surviving rows per
+        # real PMTiles v3 serving archive: MVT-encode the committed rows per
         # tile, stream the sorted tiles into one clustered file (lib.rs:82-95)
         from .operators.tile_encode import encode_tiles
         from .sources.pmtiles import write_pmtiles
 
-        rows = res.deduped
+        rows = committed
         if "image_id" not in rows.columns and "id" in rows.columns:
             rows = rows.withColumn("image_id", F.col("id").cast("string"))
         if "tags" not in rows.columns:

@@ -19,9 +19,10 @@ Reference semantics reproduced exactly (KotobaMedia/mvt-wrangler):
 
 The compiler targets Catalyst instead of a Rust enum tree: every DSL node
 lowers to built-in pyspark.sql.functions column expressions (JVM-side,
-whole-stage codegen — no Python in the hot path). Literal-vs-column
-comparisons produce a full type-cascade that Catalyst constant-folds down to
-the single live branch.
+whole-stage codegen — no Python in the hot path). Each runtime value records
+the kinds it can take (a string tag: NULL or STRING; a literal: its one
+kind), and the type cascades emit only the arms those kinds can reach — the
+tree the driver builds is already the one Catalyst would fold it down to.
 
 Value kinds: NULL=0 STRING=1 NUMBER=2 FLOAT=3 BOOL=4 (arrays exist only as
 compile-time `in`-list / literal values, never as column data).
@@ -169,43 +170,54 @@ def lit_from_json(v: Any) -> Lit:
 # Runtime (column) values: a bundle of per-kind columns
 # ---------------------------------------------------------------------------
 
+# every kind a typed tag struct's `t` field may hold; ARRAY (never column
+# data) stands for the values no ladder arm names, so a typed value keeps
+# each arm's runtime test and the ladder's own fallback
+ALL_KINDS = frozenset((NULL, STRING, NUMBER, FLOAT, BOOL, ARRAY))
+
+
 class CVal:
-    """A column-valued ExpressionValue: kind column + per-kind payloads."""
+    """A column-valued ExpressionValue: the kinds it can take at runtime, a
+    kind column, and the per-kind payloads those kinds read.
 
-    __slots__ = ("t", "s", "i", "f", "fs", "b")
+    `kinds` is known at compile time, so `display`, `truthy`, `_cmp` and
+    `_in_member_test` emit only the arms of kinds (or kind pairs) that can
+    occur: a one-kind value has no `t` test and no other payload. Dead arms
+    were folded by Catalyst anyway — results are the same, the driver just
+    builds (and the analyzer walks) a fraction of the tree.
+    """
 
-    def __init__(self, t: Column, s: Column, i: Column, f: Column, fs: Column, b: Column):
-        self.t, self.s, self.i, self.f, self.fs, self.b = t, s, i, f, fs, b
+    __slots__ = ("kinds", "t", "s", "i", "f", "fs", "b")
+
+    def __init__(self, kinds: frozenset, t: Column | None = None, s: Column | None = None,
+                 i: Column | None = None, f: Column | None = None,
+                 fs: Column | None = None, b: Column | None = None):
+        self.kinds, self.t = kinds, t
+        self.s, self.i, self.f, self.fs, self.b = s, i, f, fs, b
 
     @staticmethod
     def from_lit(v: Lit) -> "CVal":
-        return CVal(
-            t=F.lit(v.kind),
-            s=F.lit(v.s).cast("string"),
-            i=F.lit(v.i).cast("long"),
-            f=F.lit(v.f if v.kind == FLOAT else None).cast("double"),
-            fs=F.lit(v.fs).cast("string"),
-            b=F.lit(v.b).cast("boolean"),
-        )
+        """One kind; only that kind's payload is built."""
+        if v.kind == STRING:
+            return CVal(frozenset((STRING,)), s=F.lit(v.s).cast("string"))
+        if v.kind == NUMBER:
+            return CVal(frozenset((NUMBER,)), i=F.lit(v.i).cast("long"))
+        if v.kind == FLOAT:
+            return CVal(frozenset((FLOAT,)), f=F.lit(v.f).cast("double"),
+                        fs=F.lit(v.fs).cast("string"))
+        if v.kind == BOOL:
+            return CVal(frozenset((BOOL,)), b=F.lit(v.b).cast("boolean"))
+        return CVal(frozenset((v.kind,)))
 
     @staticmethod
     def from_string_col(c: Column) -> "CVal":
-        """A nullable string column (map<string,string> tag lookup): NULL or STRING."""
-        return CVal(
-            t=F.when(c.isNull(), F.lit(NULL)).otherwise(F.lit(STRING)),
-            s=c,
-            i=F.lit(None).cast("long"),
-            f=F.lit(None).cast("double"),
-            fs=F.lit(None).cast("string"),
-            b=F.lit(None).cast("boolean"),
-        )
+        """A nullable string column (map<string,string> tag lookup): NULL or
+        STRING. No kind column — the kind is NULL exactly when `c` is."""
+        return CVal(frozenset((NULL, STRING)), s=c)
 
     @staticmethod
     def from_bool_col(c: Column) -> "CVal":
-        return CVal(
-            t=F.lit(BOOL), s=F.lit(None).cast("string"), i=F.lit(None).cast("long"),
-            f=F.lit(None).cast("double"), fs=F.lit(None).cast("string"), b=c,
-        )
+        return CVal(frozenset((BOOL,)), b=c)
 
     @staticmethod
     def from_value_struct(c: Column) -> "CVal":
@@ -214,6 +226,7 @@ class CVal:
         A NULL struct (missing map key) is kind NULL.
         """
         return CVal(
+            ALL_KINDS,
             t=F.coalesce(c.getField("t"), F.lit(NULL)),
             s=c.getField("s"),
             i=c.getField("i"),
@@ -222,27 +235,53 @@ class CVal:
             b=c.getField("b"),
         )
 
+    def is_(self, k: int, kinds: frozenset | None = None) -> Column | bool:
+        """The test `kind == k` for a value known to be one of `kinds`
+        (default: all its kinds) — a Python bool when `kinds` decides it."""
+        kinds = self.kinds if kinds is None else kinds
+        if k not in kinds:
+            return False
+        if len(kinds) == 1:
+            return True
+        if self.t is None:  # string column: NULL exactly when s is null
+            return self.s.isNull() if k == NULL else self.s.isNotNull()
+        return self.t == k
+
+    def _by_kind(self, arms: list, default: Column) -> Column:
+        """CASE over the kind, in `arms` order [(kind, payload -> Column)],
+        with only the reachable arms; the last reachable kind is the ELSE."""
+        left = set(self.kinds)
+        out = None
+        for k, arm in arms:
+            if k not in left:
+                continue
+            if len(left) == 1:
+                return arm() if out is None else out.otherwise(arm())
+            out = (F if out is None else out).when(self.is_(k, frozenset(left)), arm())
+            left.discard(k)
+        if out is None:
+            return default
+        return out.otherwise(default)
+
     def display(self) -> Column:
         """Rust Display coercion (expression_compiler.rs:111-125)."""
-        return (
-            F.when(self.t == NULL, F.lit("null"))
-            .when(self.t == STRING, self.s)
-            .when(self.t == NUMBER, self.i.cast("string"))
-            .when(self.t == FLOAT, self.fs)
-            .when(self.t == BOOL, F.when(self.b, F.lit("true")).otherwise(F.lit("false")))
-            .otherwise(F.lit(None))
-        )
+        return self._by_kind([
+            (NULL, lambda: F.lit("null")),
+            (STRING, lambda: self.s),
+            (NUMBER, lambda: self.i.cast("string")),
+            (FLOAT, lambda: self.fs),
+            (BOOL, lambda: F.when(self.b, F.lit("true")).otherwise(F.lit("false"))),
+        ], F.lit(None))
 
     def truthy(self) -> Column:
         """to_bool (expression_compiler.rs:99-108)."""
-        return (
-            F.when(self.t == NULL, F.lit(False))
-            .when(self.t == STRING, self.s != "")
-            .when(self.t == NUMBER, self.i != 0)
-            .when(self.t == FLOAT, (self.fs != "0") & (self.fs != "0.0"))
-            .when(self.t == BOOL, self.b)
-            .otherwise(F.lit(False))
-        )
+        return self._by_kind([
+            (NULL, lambda: F.lit(False)),
+            (STRING, lambda: self.s != ""),
+            (NUMBER, lambda: self.i != 0),
+            (FLOAT, lambda: (self.fs != "0") & (self.fs != "0.0")),
+            (BOOL, lambda: self.b),
+        ], F.lit(False))
 
 
 Val = Union[Lit, CVal]
@@ -259,6 +298,17 @@ def _bool_val(v: Val) -> Column:
     return v.truthy()
 
 
+def _and(x: Column | bool, y: Column | bool) -> Column | bool:
+    """`x & y` where either side may be a compile-time bool."""
+    if x is False or y is False:
+        return False
+    if x is True:
+        return y
+    if y is True:
+        return x
+    return x & y
+
+
 _ORD_OPS = {
     "==": lambda c: c == 0,
     "!=": lambda c: c != 0,
@@ -272,8 +322,10 @@ _ORD_OPS = {
 def _cmp(a: Val, b: Val, op: str) -> Column:
     """compare_values coercion ladder (executor.rs:200-235) as one cascade.
 
-    Emits a boolean Column directly (one branch per type pair); with a
-    literal on either side Catalyst constant-folds the dead branches away.
+    Emits a boolean Column directly, one branch per type pair — only for
+    the pairs the operands' kinds allow; the last reachable pair is the
+    ELSE, so a string tag vs a string literal is one null test and one
+    string compare.
     """
     if isinstance(a, Lit) and isinstance(b, Lit):
         return F.lit(_ORD_OPS[op](_compare_lits(a, b)))
@@ -296,18 +348,32 @@ def _cmp(a: Val, b: Val, op: str) -> Column:
              "<": (False, True, False), ">": (False, False, True),
              "<=": (True, True, False), ">=": (True, False, True)}[op]
     eq_r, lt_r, gt_r = const  # result when ordering is Equal / Less / Greater
-    return (
-        F.when((ca.t == NULL) & (cb.t == NULL), F.lit(eq_r))
-        .when(ca.t == NULL, F.lit(lt_r))
-        .when(cb.t == NULL, F.lit(gt_r))
-        .when((ca.t == BOOL) & (cb.t == BOOL), o(ca.b.cast("int"), cb.b.cast("int")))
-        .when((ca.t == NUMBER) & (cb.t == NUMBER), o(ca.i, cb.i))
-        .when((ca.t == FLOAT) & (cb.t == FLOAT), o(ca.f, cb.f))
-        .when((ca.t == NUMBER) & (cb.t == FLOAT), o(ca.i.cast("double"), cb.f))
-        .when((ca.t == FLOAT) & (cb.t == NUMBER), o(ca.f, cb.i.cast("double")))
-        .when((ca.t == STRING) & (cb.t == STRING), o(ca.s, cb.s))
-        .otherwise(o(ca.display(), cb.display()))
-    )
+    # (kind of a, kind of b) per rung — None matches any kind
+    ladder = [
+        (NULL, NULL, lambda: F.lit(eq_r)),
+        (NULL, None, lambda: F.lit(lt_r)),
+        (None, NULL, lambda: F.lit(gt_r)),
+        (BOOL, BOOL, lambda: o(ca.b.cast("int"), cb.b.cast("int"))),
+        (NUMBER, NUMBER, lambda: o(ca.i, cb.i)),
+        (FLOAT, FLOAT, lambda: o(ca.f, cb.f)),
+        (NUMBER, FLOAT, lambda: o(ca.i.cast("double"), cb.f)),
+        (FLOAT, NUMBER, lambda: o(ca.f, cb.i.cast("double"))),
+        (STRING, STRING, lambda: o(ca.s, cb.s)),
+    ]
+    left = {(x, y) for x in ca.kinds for y in cb.kinds}
+    out = None
+    for ka, kb, arm in ladder:
+        hit = {p for p in left if ka in (None, p[0]) and kb in (None, p[1])}
+        if not hit:
+            continue
+        if hit == left:
+            return arm() if out is None else out.otherwise(arm())
+        cond = _and(ca.is_(ka, frozenset(x for x, _ in left)) if ka is not None else True,
+                    cb.is_(kb, frozenset(y for _, y in left)) if kb is not None else True)
+        out = (F if out is None else out).when(cond, arm())
+        left -= hit
+    rest = o(ca.display(), cb.display())
+    return rest if out is None else out.otherwise(rest)
 
 
 def _compare_lits(a: Lit, b: Lit) -> int:
@@ -335,19 +401,17 @@ def _compare_lits(a: Lit, b: Lit) -> int:
     return (da > db) - (da < db)
 
 
-def _in_member_test(c: CVal, member: Lit) -> Column:
-    """Exact-typed membership (HashSet equality on the enum — no coercion)."""
-    if member.kind == NULL:
-        return c.t == NULL
-    if member.kind == STRING:
-        return (c.t == STRING) & (c.s == member.s)
-    if member.kind == NUMBER:
-        return (c.t == NUMBER) & (c.i == member.i)
-    if member.kind == FLOAT:
-        return (c.t == FLOAT) & (c.fs == member.fs)
-    if member.kind == BOOL:
-        return (c.t == BOOL) & (c.b == member.b)
-    return F.lit(False)  # arrays never equal column data (no array columns)
+def _in_member_test(c: CVal, member: Lit) -> Column | bool:
+    """Exact-typed membership (HashSet equality on the enum — no coercion);
+    False at compile time when `c` cannot take the member's kind."""
+    if member.kind == ARRAY:
+        return False  # arrays never equal column data (no array columns)
+    test = c.is_(member.kind)
+    if test is False or member.kind == NULL:
+        return test
+    col, val = {STRING: (c.s, member.s), NUMBER: (c.i, member.i),
+                FLOAT: (c.fs, member.fs), BOOL: (c.b, member.b)}[member.kind]
+    return _and(test, col == val)
 
 
 # ---------------------------------------------------------------------------
@@ -436,7 +500,9 @@ def _compile_op(op: str, args: list, ctx: ColumnContext) -> Val:
         else:
             hit = F.lit(False)
             for m in set(members.arr):
-                hit = hit | _in_member_test(v, m)
+                test = _in_member_test(v, m)
+                if test is not False:
+                    hit = hit | test
         return CVal.from_bool_col(~hit if op == "not-in" else hit)
 
     if op in ("starts-with", "ends-with"):

@@ -214,9 +214,11 @@ def _ring_crossings_odd(ring, lon: Column, lat: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 def _resolved_rule(feat: FilterFeature, kind: str, layer: Column,
-                   ctx: E.ColumnContext) -> Column:
+                   ctx: E.ColumnContext) -> Column | None:
     """data.rs:264-308: specific layer entry with this kind, else "*" with
-    this kind, else false (keep)."""
+    this kind, else false (keep). None when no entry has this kind."""
+    if all(lf.get(kind) is None for lf in feat.layers.values()):
+        return None
     wildcard = feat.layers.get("*", {}).get(kind)
     wc_col = E.compile_expr(wildcard, ctx) if wildcard is not None else F.lit(False)
     out = None
@@ -233,11 +235,13 @@ def _resolved_rule(feat: FilterFeature, kind: str, layer: Column,
 
 def removal_predicate(program: FilterProgram, mask: Column, layer: Column,
                       ctx: E.ColumnContext, kind: str) -> Column:
-    """True iff ANY spatially-applicable filter's resolved rule is truthy."""
+    """True iff ANY spatially-applicable filter's resolved rule is truthy.
+    A filter with no rule of this kind keeps everything, so it adds no term."""
     out = F.lit(False)
     for i, feat in enumerate(program.features):
-        applies = mask.bitwiseAND(F.lit(1 << i)) != 0
-        out = out | (applies & _resolved_rule(feat, kind, layer, ctx))
+        rule = _resolved_rule(feat, kind, layer, ctx)
+        if rule is not None:
+            out = out | ((mask.bitwiseAND(F.lit(1 << i)) != 0) & rule)
     return out
 
 

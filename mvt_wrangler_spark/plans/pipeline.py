@@ -1,4 +1,4 @@
-"""End-to-end job: assign -> spatial join -> filter -> dedup -> rollup -> write.
+"""End-to-end job: assign -> spatial join -> filter -> dedup -> write -> rollup.
 
 This is the Spark re-expression of the reference's whole dataflow
 (/root/reference/src/lib.rs:39-101 + src/processing.rs:18-129):
@@ -9,16 +9,24 @@ This is the Spark re-expression of the reference's whole dataflow
   dict re-encode (A1)     -> parquet dictionary encoding at the sink
   ordered write (S5/W1)   -> the caller's catalog.SnapshotTable.write_snapshot
                              (range buckets on tile_id, sorted within)
-  metrics (A3)            -> df.observe named metrics + stats table
+  metrics (A3)            -> df.observe named metrics + `rollup` stats table
 
-One narrow UDF stage + exactly two shuffles on the row path (the dedup
-window here; write_snapshot's range partition for the ordered sink) — the
-same stage shape at sf0.001 and 100 TB.
+`run_pipeline` only builds the row path — scan -> tiles (+ cells UDF) ->
+filters -> dedup window — and launches no Spark job. One narrow UDF stage +
+exactly two shuffles (the dedup window here; write_snapshot's range
+partition for the ordered sink), the same stage shape at sf0.001 and
+100 TB, and the sink is the only consumer, so the rows run once.
+
+`rollup` builds the per-tile stats and the pyramid from any row table. The
+CLI applies it to the committed snapshot (SnapshotTable.read_current) after
+the write commits: the rollup reads the stored rows instead of re-running
+the row path, a resume (which stages nothing new) runs no row work at all,
+and the stats describe exactly the rows the snapshot holds.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -34,10 +42,7 @@ class PipelineResult:
     assignments: DataFrame
     survivors: DataFrame
     deduped: DataFrame
-    stats: DataFrame
-    pyramid: DataFrame
     observation: Observation | None = None
-    metrics: dict = field(default_factory=dict)
 
 
 def run_pipeline(
@@ -45,12 +50,11 @@ def run_pipeline(
     images: DataFrame,
     program: FL.FilterProgram | None,
     z: int = 10,
-    min_z: int = 0,
     dedup: bool = True,
-    n_salt: int = 8,
     with_cells: bool = False,
 ) -> PipelineResult:
-    """The flagship query (SURVEY §7.2 step 2), generalized."""
+    """The flagship query (SURVEY §7.2 step 2), generalized. Lazy: the
+    caller's sink runs it."""
     assigned = tiling.assign_tiles(images, z=z)
     if with_cells:
         from ..functions import cells as C
@@ -79,16 +83,20 @@ def run_pipeline(
     # which the ordered sink needs
     deduped = D.phash_dedup(survivors) if dedup else survivors
 
-    stats = R.tile_stats(deduped, n_salt=n_salt)
-    pyramid = R.pyramid_rollup(
-        stats.select("z", "x", "y", "n_rows", "bytes_in"), base_z=z, min_z=min_z
-    )
-
     return PipelineResult(
         assignments=assigned,
         survivors=survivors,
         deduped=deduped,
-        stats=stats,
-        pyramid=pyramid,
         observation=obs,
     )
+
+
+def rollup(rows: DataFrame, z: int, min_z: int = 0,
+           n_salt: int = 8) -> tuple[DataFrame, DataFrame]:
+    """(stats, pyramid) of tile-assigned rows at zoom z: the salted per-tile
+    stats are the pyramid's base level, materialized once by
+    pyramid_rollup (one job over `rows`, at call time), and stats read that
+    level back (z == base zoom)."""
+    base = R.tile_stats(rows, n_salt=n_salt).select("z", "x", "y", "n_rows", "bytes_in")
+    pyramid = R.pyramid_rollup(base, base_z=z, min_z=min_z)
+    return pyramid.filter(F.col("z") == z), pyramid

@@ -5,13 +5,15 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
 import sys
 import time
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mvt_wrangler_spark.operators.tile_encode import _encode_tile_blob  # noqa: E402
 

@@ -22,6 +22,7 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 R4_COMMIT = "a0ab901"
 R4_TREE = "/tmp/r4tree"
 RUNNER = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -30,7 +31,7 @@ RUNNER = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 
 def ensure_worktree() -> None:
     if not os.path.isdir(os.path.join(R4_TREE, "mvt_wrangler_spark")):
-        subprocess.run(["git", "-C", "/root/repo", "worktree", "add",
+        subprocess.run(["git", "-C", REPO, "worktree", "add",
                         "--detach", R4_TREE, R4_COMMIT], check=True)
 
 
@@ -40,8 +41,8 @@ def main() -> None:
     cells = [
         ("r4", R4_TREE, "10000"),
         ("r4", R4_TREE, "65536"),
-        ("head", "/root/repo", "10000"),
-        ("head", "/root/repo", "65536"),
+        ("head", REPO, "10000"),
+        ("head", REPO, "65536"),
     ]
     sessions = []
     for rep in range(reps):
@@ -78,7 +79,7 @@ def main() -> None:
                           "noop-sink, sf0.1, local[32]",
               "r4_commit": R4_COMMIT, "summary": summary,
               "sessions": sessions}
-    with open("/root/repo/BENCH/flagship_ab.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "flagship_ab.json"), "w") as f:
         json.dump(result, f, indent=1)
     print(json.dumps(summary, indent=1))
 

@@ -1,7 +1,7 @@
 """One flagship session for the r4-vs-r6 same-day A/B (VERDICT r5 #4).
 
 Runs ONE fresh JVM: imports the flagship from the repo checkout given in
-argv[1] (either /root/repo at HEAD or a git worktree pinned at the round-4
+argv[1] (either this repository at HEAD or a git worktree pinned at the round-4
 boundary commit), overrides the Arrow batch size to argv[2], and times the
 checkout's own q_pipeline_e2e with the bench protocol both rounds share
 (warm scan, 1 discarded JIT warmup, noop-sink runs). Prints one JSON line

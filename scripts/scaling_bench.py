@@ -18,7 +18,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DATA = "/tmp/spark_graft_bench"
 
@@ -84,7 +85,7 @@ def measure(master: str, ncpus: int, path: str, n_runs: int = 5, mode: str = "fu
     env.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     out = subprocess.run(
         ["taskset", "-c", f"0-{ncpus - 1}", sys.executable,
-         "/root/repo/scripts/scaling_run.py", master, path, str(n_runs), mode],
+         os.path.join(REPO, "scripts", "scaling_run.py"), master, path, str(n_runs), mode],
         capture_output=True, text=True, timeout=3600, env=env,
     )
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
@@ -105,7 +106,7 @@ def measure(master: str, ncpus: int, path: str, n_runs: int = 5, mode: str = "fu
 
 def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     t0 = time.time()
     path = generate(n_rows)
     # tiny twin (1% of rows): same plan, ~fixed overhead + 1% of the work —
@@ -159,7 +160,7 @@ def main():
             "scaling_efficiency_8_to_32": round(eff, 3),
             "scaling_efficiency_overhead_corrected": round(eff_corr, 3),
         }
-    with open("/root/repo/BENCH/scaling.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
         json.dump(payload, f, indent=2)
     print(json.dumps(payload))
 

@@ -35,8 +35,9 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from scaling_bench import generate  # noqa: E402
 
@@ -50,7 +51,7 @@ def main() -> None:
     extra = {
         "spark.executor.memory": f"{exec_mem_mb - 2048}m",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-        "spark.executorEnv.PYTHONPATH": "/root/repo",
+        "spark.executorEnv.PYTHONPATH": REPO,
     }
     os.environ["SPARK_GRAFT_EXTRA_CONF"] = json.dumps(extra)
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
@@ -69,7 +70,7 @@ def main() -> None:
             cores = f"{i * 8}-{i * 8 + 7}"
             p = subprocess.Popen(
                 ["taskset", "-c", cores, sys.executable,
-                 "/root/repo/scripts/scaling_run.py", master, path,
+                 os.path.join(REPO, "scripts", "scaling_run.py"), master, path,
                  str(n_runs), mode],
                 stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                 text=True, env=dict(os.environ))
@@ -98,7 +99,7 @@ def main() -> None:
             "per_process": per_proc,
         }
         print(mode, "t_conc", t_conc, file=sys.stderr, flush=True)
-        with open("/root/repo/BENCH/scaling_ceiling.json", "w") as f:
+        with open(os.path.join(REPO, "BENCH", "scaling_ceiling.json"), "w") as f:
             json.dump(payload, f, indent=2)
     print(json.dumps({m: s["t_conc_median_sec"]
                       for m, s in payload["scenarios"].items()}))

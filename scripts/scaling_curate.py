@@ -28,7 +28,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 DATA = os.environ.get("SPARK_GRAFT_SCALING_DIR", "/tmp/scaling")
 
@@ -133,7 +134,7 @@ def main() -> None:
         return
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     t0 = time.time()
     path = generate(n_docs)
     n_tiny = max(n_docs // 100, 100_000)
@@ -165,7 +166,7 @@ def main() -> None:
     if m32["work_sec"] > 0:
         payload["corrected_efficiency"] = round(
             m8["work_sec"] / m32["work_sec"] / 4, 3)
-    with open("/root/repo/BENCH/scaling_curate.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "scaling_curate.json"), "w") as f:
         json.dump(payload, f, indent=1)
     print(json.dumps({"raw_efficiency": payload["raw_efficiency"],
                       "corrected": payload.get("corrected_efficiency")}))

@@ -37,7 +37,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from scaling_bench import generate, measure  # noqa: E402  (same protocol)
 
@@ -45,7 +46,7 @@ from scaling_bench import generate, measure  # noqa: E402  (same protocol)
 def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 120_000_000
     exec_mem_mb = int(sys.argv[2]) if len(sys.argv) > 2 else 16384
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     t0 = time.time()
     path = generate(n_rows)
     n_tiny = max(n_rows // 100, 100_000)
@@ -64,7 +65,7 @@ def main():
         # which do not see the driver's sys.path — the cluster-mode analog
         # of spark-submit --py-files (the e2e test ships a zip; a fixed
         # path is enough for the bench)
-        "spark.executorEnv.PYTHONPATH": "/root/repo",
+        "spark.executorEnv.PYTHONPATH": REPO,
     }
     extra.update(json.loads(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "{}")))
     env_extra = json.dumps(extra)
@@ -121,7 +122,7 @@ def main():
             "scaling_efficiency_8_to_32": round(eff, 3),
             "scaling_efficiency_overhead_corrected": round(eff_corr, 3),
         }
-        with open("/root/repo/BENCH/scaling_localcluster.json", "w") as f:
+        with open(os.path.join(REPO, "BENCH", "scaling_localcluster.json"), "w") as f:
             json.dump(payload, f, indent=2)
     print(json.dumps(payload))
 

@@ -24,8 +24,9 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from scaling_bench import generate, measure  # noqa: E402
 
@@ -42,7 +43,7 @@ def main():
     extra = {
         "spark.executor.memory": f"{exec_mem_mb - 2048}m",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-        "spark.executorEnv.PYTHONPATH": "/root/repo",
+        "spark.executorEnv.PYTHONPATH": REPO,
     }
     extra.update(json.loads(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "{}")))
     os.environ["SPARK_GRAFT_EXTRA_CONF"] = json.dumps(extra)
@@ -65,7 +66,7 @@ def main():
             results[master] = {"median_sec": med, "runs": r["runs"]}
             print(mode, master, "mid median", med, file=sys.stderr, flush=True)
         payload["scenarios"][mode] = {"results": results}
-        with open("/root/repo/BENCH/scaling_midtwin.json", "w") as f:
+        with open(os.path.join(REPO, "BENCH", "scaling_midtwin.json"), "w") as f:
             json.dump(payload, f, indent=2)
     print(json.dumps({m: {k: v["median_sec"] for k, v in
                           s["results"].items()}

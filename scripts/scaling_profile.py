@@ -6,10 +6,12 @@ Usage: taskset -c 0-N python scripts/scaling_profile.py local[N] <points_parquet
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main():

@@ -17,7 +17,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _metrics(ui_url: str | None) -> tuple[int, int]:

@@ -187,7 +187,8 @@ def test_spark_string_tags(spark):
 
 @pytest.mark.spark
 def test_property_spark_matches_oracle(spark):
-    """Randomized expressions x contexts: Catalyst result == oracle result."""
+    """Randomized expressions x contexts: Catalyst result == oracle result,
+    over typed tags and over string tags."""
     import random
 
     rng = random.Random(1234)
@@ -247,30 +248,44 @@ def test_property_spark_matches_oracle(spark):
         return {"string": lambda: E.tv_string(p), "number": lambda: E.tv_number(p),
                 "float": lambda: E.tv_float(float(p)), "bool": lambda: E.tv_bool(p)}[k]()
 
-    contexts = []
-    for _ in range(6):
-        props = {k: rand_tagval() for k in rng.sample(keys, rng.randint(0, len(keys)))}
-        cur = rng.choice([None, "name", "name:ja", "a"])
-        gt = rng.choice([None, "Point", "Polygon"])
-        contexts.append((props, cur, gt))
+    def check(ctx, df, contexts):
+        """Compile 120 random expressions against `ctx`, evaluate them over
+        `df` (one row per context) and compare with the oracle."""
+        exprs, cols = [], []
+        while len(exprs) < 120:
+            e = rand_expr()
+            try:
+                cols.append(E.compile_expr(e, ctx).alias(f"c{len(exprs)}"))
+                exprs.append(e)
+            except E.ExpressionCompileError:
+                continue
+        got = df.select(*cols).collect()
+        for ci, (props, cur, gt) in enumerate(contexts):
+            octx = O.Context(dict(props), cur, gt)
+            for i, e in enumerate(exprs):
+                want = O.evaluate_bool(e, octx)
+                assert got[ci][f"c{i}"] == want, (e, props, cur, gt)
 
+    def rand_contexts(tagval):
+        out = []
+        for _ in range(6):
+            props = {k: tagval() for k in rng.sample(keys, rng.randint(0, len(keys)))}
+            cur = rng.choice([None, "name", "name:ja", "a"])
+            gt = rng.choice([None, "Point", "Polygon"])
+            out.append((props, cur, gt))
+        return out
+
+    # typed tags: map<string, struct<t,s,i,f,fs,b>>, every value kind
+    contexts = rand_contexts(rand_tagval)
     rows = [({k: to_tv(v) for k, v in props.items()}, cur, gt) for props, cur, gt in contexts]
     df = spark.createDataFrame(rows, f"tags {E.TYPED_TAGS_DDL}, cur_key string, geom_type string")
-    ctx = E.ColumnContext(tags=F.col("tags"), key=F.col("cur_key"),
-                          geom_type=F.col("geom_type"), typed=True)
+    check(E.ColumnContext(tags=F.col("tags"), key=F.col("cur_key"),
+                          geom_type=F.col("geom_type"), typed=True), df, contexts)
 
-    exprs, cols = [], []
-    while len(exprs) < 120:
-        e = rand_expr()
-        try:
-            cols.append(E.compile_expr(e, ctx).alias(f"c{len(exprs)}"))
-            exprs.append(e)
-        except E.ExpressionCompileError:
-            continue
-
-    got = df.select(*cols).collect()
-    for ci, (props, cur, gt) in enumerate(contexts):
-        octx = O.Context(dict(props), cur, gt)
-        for i, e in enumerate(exprs):
-            want = O.evaluate_bool(e, octx)
-            assert got[ci][f"c{i}"] == want, (e, props, cur, gt)
+    # string tags: map<string,string> (every present value kind STRING, a
+    # missing key NULL) with nullable key and type — the graft data path
+    contexts = rand_contexts(lambda: ("string", rng.choice(strings)))
+    rows = [({k: v for k, (_, v) in props.items()}, cur, gt) for props, cur, gt in contexts]
+    df = spark.createDataFrame(rows, "tags map<string,string>, cur_key string, geom_type string")
+    check(E.ColumnContext(tags=F.col("tags"), key=F.col("cur_key"),
+                          geom_type=F.col("geom_type")), df, contexts)

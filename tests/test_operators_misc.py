@@ -98,11 +98,33 @@ def test_streaming_windowed_counts(spark, tmp_path):
     assert got_map == want
 
 
+def _pmtiles_feature_count(path) -> int:
+    import gzip
+
+    from mvt_wrangler_spark.functions import mvt
+    from mvt_wrangler_spark.sources.pmtiles import COMPRESSION_GZIP, PMTilesReader
+
+    rd = PMTilesReader(str(path))
+    n = 0
+    for tid in rd.tile_ids():
+        blob = rd.get_tile(tid)
+        if rd.header.tile_compression == COMPRESSION_GZIP:
+            blob = gzip.decompress(blob)
+        n += sum(len(layer["features"]) for layer in mvt.decode_tile(blob)["layers"])
+    return n
+
+
 def test_cli_end_to_end(tmp_path):
-    """Drive the real CLI surface in a subprocess (fresh JVM)."""
+    """Drive the real CLI surface in a subprocess (fresh JVM), then resume
+    the same job: the resume commits one more snapshot of the same rows, and
+    after each run the stats, the pyramid's z0 and the PMTiles archive all
+    count exactly the committed rows."""
+    import pyarrow.parquet as pq
+
     src = tmp_path / "in.parquet"
     out = tmp_path / "out"
     prog = tmp_path / "filter.geojson"
+    pmt = tmp_path / "out.pmtiles"
     code = (
         f"import sys; sys.path.insert(0, {REPO!r})\n"
         "from mvt_wrangler_spark.session import get_spark\n"
@@ -115,19 +137,28 @@ def test_cli_end_to_end(tmp_path):
     from mvt_wrangler_spark.sources.fixtures import default_filter_geojson
 
     prog.write_text(json.dumps(default_filter_geojson()))
-    r = subprocess.run(
-        [sys.executable, "-m", "mvt_wrangler_spark.cli", str(src), str(out),
-         "--filter", str(prog), "--zoom", "8", "--buckets", "4",
-         "--master", "local[4]", "-n", "testset", "--job-id", "t1"],
-        capture_output=True, text=True, timeout=600, cwd=REPO,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
-    summary = json.loads(r.stdout.strip().splitlines()[-1])
-    assert summary["rows_out"] > 0 and summary["snapshot"] == 1
-    meta = json.loads((out / "metadata.json").read_text())
-    assert meta["name"] == "testset" and meta["zoom"] == 8
-    assert (out / "CURRENT").read_text().strip() == "1"
-    assert (out / "stats").exists() and (out / "pyramid").exists()
+    argv = [sys.executable, "-m", "mvt_wrangler_spark.cli", str(src), str(out),
+            "--filter", str(prog), "--zoom", "8", "--buckets", "4",
+            "--master", "local[4]", "-n", "testset", "--job-id", "t1",
+            "--pmtiles", str(pmt)]
+    rows_out = None
+    for snapshot in (1, 2):  # fresh run, then a resume of the same job id
+        r = subprocess.run(argv, capture_output=True, text=True, timeout=600, cwd=REPO)
+        assert r.returncode == 0, r.stderr[-2000:]
+        summary = json.loads(r.stdout.strip().splitlines()[-1])
+        rows_out = rows_out or summary["rows_out"]
+        assert rows_out > 0 and summary["rows_out"] == rows_out
+        assert summary["snapshot"] == snapshot
+        assert (out / "CURRENT").read_text().strip() == str(snapshot)
+        meta = json.loads((out / "metadata.json").read_text())
+        assert meta["name"] == "testset" and meta["zoom"] == 8
+        n_stats = sum(pq.read_table(out / "stats", columns=["n_rows"])
+                      .column("n_rows").to_pylist())
+        pyr = pq.read_table(out / "pyramid", columns=["z", "n_rows"]).to_pylist()
+        assert {p["z"] for p in pyr} == set(range(0, 9))
+        z0 = sum(p["n_rows"] for p in pyr if p["z"] == 0)
+        assert n_stats == z0 == rows_out
+        assert summary["pmtiles"] and _pmtiles_feature_count(pmt) == rows_out
 
 
 def test_cli_rejects_missing_input(tmp_path):

@@ -38,7 +38,7 @@ def test_pipeline_matches_oracle(spark, images_rows):
     df, rows = images_rows
     prog = FilterProgram.from_geojson(default_filter_geojson())
 
-    res = P.run_pipeline(spark, df, prog, z=Z, dedup=True, n_salt=4)
+    res = P.run_pipeline(spark, df, prog, z=Z, dedup=True)
 
     # --- assignments ---
     got_assign = {r.image_id: (r.z, r.x, r.y, r.tile_id, r.px, r.py)
@@ -76,11 +76,13 @@ def test_pipeline_matches_oracle(spark, images_rows):
     assert kept_ids == want_keep
 
     # --- stats + pyramid consistency ---
-    stats = res.stats.collect()
+    stats, pyramid = P.rollup(res.deduped, Z, n_salt=4)
+    stats = stats.collect()
     assert sum(r.n_rows for r in stats) == len(kept_ids)
-    pyr = res.pyramid.filter(F.col("z") == 0).collect()
+    assert {r.z for r in stats} == {Z}
+    pyr = pyramid.filter(F.col("z") == 0).collect()
     assert len(pyr) == 1 and pyr[0].n_rows == len(kept_ids)
-    levels = {r.z for r in res.pyramid.select("z").distinct().collect()}
+    levels = {r.z for r in pyramid.select("z").distinct().collect()}
     assert levels == set(range(0, Z + 1))
 
 

@@ -112,3 +112,51 @@ def test_single_python_pass_shape(spark, name, budget):
         f"input lost its localCheckpoint or a match UDF lost its "
         f"asNondeterministic marker; every extra node re-executes the "
         f"whole Python pass")
+
+
+def _filter_input(spark):
+    from mvt_wrangler_spark.sources import images as I
+    from pyspark.sql import functions as F
+
+    return (I.synthetic_images(spark, 200, with_pixels=False, partitions=2)
+            .withColumn("filter_mask", F.lit(7).cast("long")))
+
+
+@pytest.mark.spark
+def test_tag_filter_plan_is_small(spark):
+    """The fixture program's compiled filters carry only the branches their
+    value kinds can reach: over string tags the analyzed plan after
+    apply_tag_filter stays under 4 KB (a cascade over every value kind, which
+    Catalyst then folds away again in every query, made it ~15 KB)."""
+    from mvt_wrangler_spark.operators import filters as FL
+    from mvt_wrangler_spark.sources.fixtures import default_filter_geojson
+
+    prog = FL.FilterProgram.from_geojson(default_filter_geojson())
+    df = _filter_input(spark)
+    base = len(df._jdf.queryExecution().analyzed().toString())
+    out = FL.apply_tag_filter(FL.apply_feature_filter(df, prog), prog)
+    grown = len(out._jdf.queryExecution().analyzed().toString()) - base
+    assert grown < 4096, f"filters add {grown} B to the analyzed plan"
+
+
+@pytest.mark.spark
+def test_run_pipeline_launches_no_job(spark):
+    """run_pipeline only builds the row path; its one consumer (the sink)
+    runs it. An eager pin or action inside it would run the rows again."""
+    from mvt_wrangler_spark.operators.filters import FilterProgram
+    from mvt_wrangler_spark.plans.pipeline import run_pipeline
+    from mvt_wrangler_spark.sources.fixtures import default_filter_geojson
+
+    prog = FilterProgram.from_geojson(default_filter_geojson())
+    df = _filter_input(spark).drop("filter_mask")
+    sc = spark.sparkContext
+    sc.setJobGroup("run-pipeline-probe", "run_pipeline construction")
+    try:
+        res = run_pipeline(spark, df, prog, z=10, with_cells=True)
+        assert sc.statusTracker().getJobIdsForGroup("run-pipeline-probe") == []
+        # the probe sees jobs: running the result lands in the group
+        res.deduped.count()
+        assert sc.statusTracker().getJobIdsForGroup("run-pipeline-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
